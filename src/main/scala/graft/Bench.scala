@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Benchmark main: times every query at the given scale factor and prints
   * one JSON line for the driver (BENCH_r{N}.json).
   */
@@ -22,15 +24,25 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
+    // Generated classes each query compiled (Janino compiles are counted
+    // JVM-wide), per pass: a warm pass that compiles next to nothing shows
+    // the session's codegen cache holds the registry's working set.
+    val compiles = scala.collection.mutable.LinkedHashMap[String, Seq[Long]]()
+    def compiled(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+        .getCount
     def pass(): Seq[(String, Double, Boolean)] =
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
+        val c0 = compiled()
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-        (name, (System.nanoTime() - t0) / 1e9, ok)
+        val secs = (System.nanoTime() - t0) / 1e9
+        compiles(name) = compiles.getOrElse(name, Seq.empty) :+ (compiled() - c0)
+        (name, secs, ok)
       }
     val p1 = pass()
     val p2 = pass().map { case (k, v, ok) => k -> ((v, ok)) }.toMap
@@ -57,13 +69,21 @@ object Bench {
       "\"" + name + "\":[" + (if (ok1) ms(v1) else "-1") + "," +
         (if (ok2) ms(v2) else "-1") + "]"
     }.mkString("{", ",", "}")
+    val compileJson = compiles.map { case (name, cs) =>
+      "\"" + name + "\":" + cs.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     // Run-condition provenance, so a builder artifact and a driver rerun
     // are comparable at a glance (the r12 builder/driver 133s-vs-171s gap
     // was undiagnosable without knowing each run's heap and thread count;
     // min-of-passes hides nothing when both raw passes are committed too).
+    // Metaspace holds every generated class the codegen cache keeps alive.
+    val metaspaceMb = java.lang.management.ManagementFactory
+      .getMemoryPoolMXBeans.asScala.filter(_.getName == "Metaspace")
+      .map(_.getUsage.getUsed).sum / 1048576
     val env = s"""{"xmx_mb":${Runtime.getRuntime.maxMemory / 1048576},""" +
-      s""""cpus":$cpus,"host_cores":${Runtime.getRuntime.availableProcessors}}"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFail,"env":$env,"queries":$qs,"passes":$passes,"sf":"$sfDir"}"""
+      s""""cpus":$cpus,"host_cores":${Runtime.getRuntime.availableProcessors},""" +
+      s""""metaspace_mb":$metaspaceMb}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","failed":$nFail,"env":$env,"queries":$qs,"passes":$passes,"compiles":$compileJson,"sf":"$sfDir"}"""
     // The driver captures only a ~2000-char tail of stdout and parses the
     // JSON line it finds there. The full-registry line (~200 queries, both
     // passes) is ~6 KB — it can NEVER fit, so every round's BENCH_r{N}.json

@@ -845,8 +845,13 @@ object Analytics {
     // |customers|-row frame consumed three times below (offsets, count,
     // rank join) — checkpoint so the orders scan + decimal aggregation
     // run ONCE instead of per consumer.
+    // A customer whose every o_totalprice is null has a null total. The
+    // oracle's NTILE orders ASC NULLS LAST (DuckDB's default), so null
+    // totals take the last bucket and rank after every real total, ties
+    // broken by custkey — nulls last there too.
     val b = totals
-      .withColumn("bucket", floor(col("total") / lit(1000.0)).cast("long"))
+      .withColumn("bucket", coalesce(
+        floor(col("total") / lit(1000.0)).cast("long"), lit(Long.MaxValue)))
       .localCheckpoint()
     // The bucket-count frame is <= |distinct $1000 buckets| rows —
     // metadata at any scale. Collect it ONCE and derive the offset table
@@ -872,7 +877,8 @@ object Analytics {
     b.join(broadcast(offs), "bucket")
       .withColumn("rank",
         col("off") + row_number().over(
-          Window.partitionBy("bucket").orderBy("total", "o_custkey"))
+          Window.partitionBy("bucket")
+            .orderBy(col("total").asc_nulls_last, col("o_custkey").asc_nulls_last))
           .cast("long"))
       .withColumn("n", lit(n))
       .withColumn("decile",

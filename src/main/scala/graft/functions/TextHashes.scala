@@ -272,6 +272,9 @@ case class ArrayCounts(child: Expression)
     // re-encode per distinct key — pure per-row overhead on the hottest
     // tokenize path (guide §4). Keys are cloned for the output map so no
     // returned bytes alias the input row's buffer.
+    // Equality is on raw bytes: invalid UTF-8 sequences that would decode
+    // to the same replacement-character String count as distinct tokens.
+    // Tokens split from valid UTF-8 text are unaffected.
     val m = new java.util.LinkedHashMap[UTF8String, Long]()
     var i = 0
     while (i < n) {
@@ -312,6 +315,7 @@ case class SimHash48(child: Expression)
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
     // UTF8String content-hashes directly — no per-token UTF-16 decode.
+    // Byte equality, as in ArrayCounts: invalid UTF-8 variants stay distinct.
     val seen = new java.util.HashSet[UTF8String](n * 2)
     val sums = new Array[Int](48)
     var i = 0

@@ -245,6 +245,25 @@ object Glog {
     require(topic != null && topic.nonEmpty && !topic.exists(("/\\" + '\u0000').contains(_)),
       s"glog topic name not storable as a directory: '$topic'")
 
+  /** Whether two files hold the same bytes: equal length, then equal
+    * SHA-256 digests.
+    */
+  private def sameBytes(fs: org.apache.hadoop.fs.FileSystem,
+      a: org.apache.hadoop.fs.Path, b: org.apache.hadoop.fs.Path): Boolean = {
+    def sha256(p: org.apache.hadoop.fs.Path): Array[Byte] = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val in = fs.open(p)
+      try {
+        val buf = new Array[Byte](1 << 16)
+        var n = in.read(buf)
+        while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
+      } finally in.close()
+      md.digest()
+    }
+    fs.getFileStatus(a).getLen == fs.getFileStatus(b).getLen &&
+      java.util.Arrays.equals(sha256(a), sha256(b))
+  }
+
   /** Executor-side segment writer: one shuffle onto (topic, part),
     * offset-sorted batching, segments written through the Hadoop
     * FileSystem API (works on any FS; no driver involvement).
@@ -304,16 +323,22 @@ object Glog {
           // assignment) lists the directory, misses a committed segment,
           // and computes a shrunken end offset. Retried batches drop
           // their stale segments up front (dropBatchSegments), so a
-          // rename that loses because the destination exists is a
-          // concurrent duplicate attempt with identical bytes — drop
-          // ours and let theirs stand.
-          if (!pfs.rename(tmpPath, segPath)) {
-            pfs.delete(tmpPath, false)
+          // segment already in place should be a concurrent duplicate
+          // attempt with identical bytes: drop ours and let theirs (and
+          // its own sidecar) stand. The existence check comes first
+          // because a local-filesystem rename replaces its target. Any
+          // other bytes under the name are a different record set, and
+          // keeping either one would silently lose the other's records.
+          if (!pfs.exists(segPath) && pfs.rename(tmpPath, segPath))
+            writeStats(pfs, segPath, minOffs, maxOffs, maxTms, attempt)
+          else {
             require(pfs.exists(segPath),
               s"glog segment commit failed for $segPath")
-            // a concurrent duplicate attempt won: its identical bytes
-            // stand, and its own sidecar write covers the stats
-          } else writeStats(pfs, segPath, minOffs, maxOffs, maxTms, attempt)
+            val same = sameBytes(pfs, tmpPath, segPath)
+            pfs.delete(tmpPath, false)
+            if (!same) throw new IllegalStateException(
+              s"glog segment $segPath already holds different records")
+          }
         }
       }
   }
@@ -334,6 +359,21 @@ object Glog {
     fs.create(success, true).close()
   }
 
+  /** The `part=` directories of a store's `topic=` directories (empty for
+    * a store that does not exist yet); other paths are ignored.
+    */
+  private def partDirs(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+    if (!fs.exists(root)) Seq.empty
+    else for {
+      tDir <- fs.listStatus(root).toSeq
+      if tDir.isDirectory && tDir.getPath.getName.startsWith("topic=")
+      pDir <- fs.listStatus(tDir.getPath).toSeq
+      if pDir.isDirectory && pDir.getPath.getName.startsWith("part=")
+    } yield pDir.getPath
+
+  private val BatchSegment = "segment-b(\\d+)\\.glogx?".r
+
   /** Delete `segment-b<id>.glog` files with id >= fromBatchId (and stale
     * temp files) across the store — the recovery step that makes the
     * streaming sink's foreachBatch idempotent: a retried or re-delivered
@@ -345,23 +385,33 @@ object Glog {
       conf: org.apache.hadoop.conf.Configuration, fromBatchId: Long): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return
-    val seg = "segment-b(\\d+)\\.glog".r
-    val idx = "segment-b(\\d+)\\.glogx".r
-    for {
-      tDir <- fs.listStatus(root)
-      if tDir.isDirectory && tDir.getPath.getName.startsWith("topic=")
-      pDir <- fs.listStatus(tDir.getPath)
-      if pDir.isDirectory && pDir.getPath.getName.startsWith("part=")
-      f <- fs.listStatus(pDir.getPath)
-      name = f.getPath.getName
-    } name match {
-      case seg(id) if id.toLong >= fromBatchId => fs.delete(f.getPath, false)
-      case idx(id) if id.toLong >= fromBatchId => fs.delete(f.getPath, false)
-      case _ if name.startsWith(".") && name.contains(".tmp-") =>
-        fs.delete(f.getPath, false)
-      case _ => ()
+    for (pDir <- partDirs(fs, root); f <- fs.listStatus(pDir)) {
+      val name = f.getPath.getName
+      name match {
+        case BatchSegment(id) if id.toLong >= fromBatchId =>
+          fs.delete(f.getPath, false)
+        case _ if name.startsWith(".") && name.contains(".tmp-") =>
+          fs.delete(f.getPath, false)
+        case _ => ()
+      }
     }
+  }
+
+  /** One past the highest `segment-b<id>` batch id in a store (0 for a
+    * store without batch segments): where a new streaming-sink run starts
+    * numbering its batches, so it never reuses an earlier run's segment
+    * names and its retry step never drops an earlier run's segments.
+    */
+  def nextBatchId(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Long = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(conf)
+    val ids = for (pDir <- partDirs(fs, root); f <- fs.listStatus(pDir).toSeq)
+      yield f.getPath.getName match {
+        case BatchSegment(id) => id.toLong + 1
+        case _ => 0L
+      }
+    (0L +: ids).max
   }
 
   /** Current end offsets per "topic/part" directory of a store (empty map
@@ -372,16 +422,10 @@ object Glog {
       conf: org.apache.hadoop.conf.Configuration): Map[String, Long] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
-    if (!fs.exists(root)) return Map.empty
-    (for {
-      tDir <- fs.listStatus(root).toSeq
-      if tDir.isDirectory && tDir.getPath.getName.startsWith("topic=")
-      pDir <- fs.listStatus(tDir.getPath).toSeq
-      if pDir.isDirectory && pDir.getPath.getName.startsWith("part=")
-    } yield {
-      val topic = tDir.getPath.getName.stripPrefix("topic=")
-      val part = pDir.getPath.getName.stripPrefix("part=")
-      s"$topic/$part" -> endOffset(fs, pDir.getPath)
-    }).toMap
+    partDirs(fs, root).map { pDir =>
+      val topic = pDir.getParent.getName.stripPrefix("topic=")
+      val part = pDir.getName.stripPrefix("part=")
+      s"$topic/$part" -> endOffset(fs, pDir)
+    }.toMap
   }
 }

@@ -1045,22 +1045,30 @@ object Streams {
     * with the glog MicroBatchStream source this closes the Kafka
     * source/sink loop over the engine's own storage. Returns the number
     * of micro-batches written.
+    *
+    * The query keeps no checkpoint, so each run numbers its micro-batches
+    * from 0; segment names continue from the store's highest batch id
+    * instead, so a second run into the same store appends after the first
+    * rather than overwriting (or dropping) its segments.
     */
   def runGlogIngest(spark: SparkSession, dir: String, outPath: String): Long = {
     import org.apache.spark.sql.expressions.Window
     val stream = eventStream(spark, dir)
+    val firstSeg = graft.sources.Glog.nextBatchId(outPath,
+      spark.sparkContext.hadoopConfiguration)
     var batches = 0L
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batches += 1
         val spk = batch.sparkSession
         import spk.implicits._
+        val seg = firstSeg + batchId
         // Idempotence: a retried/re-delivered micro-batch first removes
         // anything a previous attempt of this (or a later) batch wrote, so
         // the end offsets below count only fully committed earlier batches
         // — the sink analog of the broker's producer-state dedup.
         graft.sources.Glog.dropBatchSegments(outPath,
-          spk.sparkContext.hadoopConfiguration, batchId)
+          spk.sparkContext.hadoopConfiguration, seg)
         val ends = graft.sources.Glog.listEnds(outPath,
           spk.sparkContext.hadoopConfiguration)
         val endsDf = ends.toSeq.map { case (key, e) =>
@@ -1079,7 +1087,7 @@ object Streams {
             coalesce(col("prev_end"), lit(0L)) + col("rank") - 1L)
           .select("topic", "part", "offs", "event_id", "tms", "k", "v")
           .as[graft.sources.Glog.Rec]
-        graft.sources.Glog.writeSegments(recs, outPath, s"segment-b$batchId")
+        graft.sources.Glog.writeSegments(recs, outPath, s"segment-b$seg")
       }
       .start()
     q.processAllAvailable()

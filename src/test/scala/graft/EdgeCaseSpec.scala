@@ -212,4 +212,34 @@ class EdgeCaseSpec extends AnyFunSuite {
       good.split("\n").map(_.length.toLong).sum)
     c4.unpersist()
   }
+
+  test("customer_spend_deciles: null totals rank last, as the oracle's NTILE") {
+    val d = java.nio.file.Files.createTempDirectory("graft_edge_deciles")
+    d.toFile.deleteOnExit()
+    import spark.implicits._
+    // 12 customers: 11 has only a null price, 12 two of them, and 3 one
+    // null beside a real price (the sum skips it).
+    Seq[(Long, Option[Double])]((1, Some(500.0)), (2, Some(1500.0)),
+      (3, Some(250.0)), (3, None), (4, Some(2500.5)), (5, Some(999.99)),
+      (6, Some(1000.0)), (7, Some(3000.0)), (8, Some(10.0)),
+      (9, Some(750.25)), (10, Some(1750.0)), (11, None), (12, None),
+      (12, None))
+      .toDF("o_custkey", "o_totalprice")
+      .coalesce(1).write.parquet(s"$d/orders.parquet")
+    val got = graft.analytics.Analytics.customerSpendDeciles(spark, d.toString)
+      .collect().map(r => r.getAs[Long]("decile") -> (
+        r.getAs[Long]("n_customers"), Option(r.getAs[java.lang.Double]("min_total")),
+        Option(r.getAs[java.lang.Double]("max_total")),
+        Option(r.getAs[java.lang.Double]("sum_total")))).toMap
+    def t(n: Long, mn: Double, mx: Double, sm: Double) =
+      (n, Some(mn), Some(mx), Some(sm))
+    // DuckDB's NTILE(10) OVER (ORDER BY total, o_custkey) on these rows:
+    // 12 = 2 + 2 + 8 x 1, null totals last (its default null order).
+    assert(got == Map(
+      1L -> t(2, 10.0, 250.0, 260.0), 2L -> t(2, 500.0, 750.25, 1250.25),
+      3L -> t(1, 999.99, 999.99, 999.99), 4L -> t(1, 1000.0, 1000.0, 1000.0),
+      5L -> t(1, 1500.0, 1500.0, 1500.0), 6L -> t(1, 1750.0, 1750.0, 1750.0),
+      7L -> t(1, 2500.5, 2500.5, 2500.5), 8L -> t(1, 3000.0, 3000.0, 3000.0),
+      9L -> ((1L, None, None, None)), 10L -> ((1L, None, None, None))))
+  }
 }

@@ -318,6 +318,44 @@ class GlogSpec extends AnyFunSuite {
     assert(Glog.listEnds(out, conf) == before)
   }
 
+  test("a second sink run appends after the first at dense offsets") {
+    val out = java.nio.file.Files.createTempDirectory("graft_glog_rerun").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    graft.streaming.Streams.runGlogIngest(spark, dir, out)
+    val first = Glog.listEnds(out, conf)
+    graft.streaming.Streams.runGlogIngest(spark, dir, out)
+    // both runs' records: every event twice, every partition twice as long
+    assert(Glog.listEnds(out, conf) == first.map { case (k, e) => k -> 2 * e })
+    val got = spark.read.format("glog").load(out)
+    assert(got.count() == 2 * Tables.t(spark, dir, "events").count())
+    assert(got.groupBy("event_id").count().filter(col("count") =!= 2L)
+      .count() == 0)
+    val dense = got.groupBy("topic", "part")
+      .agg(min("offs").as("mn"), max("offs").as("mx"),
+        countDistinct("offs").as("d"), count(lit(1)).as("n"))
+    assert(dense.filter(col("mn") =!= 0L || col("mx") =!= col("n") - 1 ||
+      col("d") =!= col("n")).count() == 0)
+  }
+
+  test("a segment name reused for different records fails loudly") {
+    import spark.implicits._
+    val p = java.nio.file.Files.createTempDirectory("graft_glog_reuse").toString
+    def recs(n: Long) = (0L until n).map(i =>
+      Glog.Rec("t", 0L, i, i, 1700000000000L + i, s"k$i", s"v$i"))
+    Glog.writeSegments(spark.createDataset(recs(10L)), p, "segment-0")
+    // identical bytes under the taken name: a duplicate attempt, kept
+    Glog.writeSegments(spark.createDataset(recs(10L)), p, "segment-0")
+    val e = intercept[Exception](
+      Glog.writeSegments(spark.createDataset(recs(11L)), p, "segment-0"))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(c => Option(c.getMessage)
+      .exists(_.contains("already holds different records"))), e)
+    // the first record set stands and no temp file is left behind
+    assert(spark.read.format("glog").load(p).count() == 10L)
+    assert(new java.io.File(s"$p/topic=t/part=0").list()
+      .filter(_.contains(".tmp-")).isEmpty)
+  }
+
   test("stream offset JSON round-trips hostile topic names") {
     val o = graft.sources.GlogOffset(Map(
       "a,b/0" -> 5L, "c:d\"e/1" -> 7L, "plain/2" -> 0L))
